@@ -21,6 +21,8 @@ row data, then only states shuffle on the group key — immune to the
 skewed source distribution by construction (the heavy group's rows
 never co-locate).  ``io.salted`` remains available for the
 applyInPandas variant when per-group state must see all rows together.
+All four build entry points ({DataFrame scan, file list} x {ungrouped,
+grouped}) run the same phase-1 task, ``_build_tasks``.
 
 Resumability: with a checkpoint dir, each task atomically writes its
 partial state file and a re-run skips completed partitions WITHOUT
@@ -357,28 +359,113 @@ def _commit_state(out: pa.RecordBatch, done: str) -> None:
     os.replace(tmp, done)
 
 
-def _partial_builder(specs: tuple[SketchSpec, ...], ckpt_dir: str | None,
-                     run_id: str | None):
-    """Returns the mapInArrow function building all specs in one pass."""
+def _plan_fingerprint(proj: DataFrame, specs: tuple[SketchSpec, ...]) -> str:
+    """Identity of a DataFrame input for the slicing pin.  Weaker than
+    the file-direct pin (a DataFrame's content is not enumerable here)
+    but it catches a resume against a DIFFERENT input (path/schema/plan)
+    that happens to have the same task count."""
+    import hashlib
+    import re
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    # exprIds ("tokens#45") differ per session — strip them or a
+    # legitimate resume in a fresh session would spuriously mismatch.
+    # The analyzed plan alone does NOT name the scanned path
+    # ("Relation [cols] parquet" is path-free), so the fingerprint
+    # also folds in the scan's file listing — bounded to the ends of
+    # the sorted list so a million-file table stays cheap while a
+    # different input directory still changes the pin.  The spec names
+    # stay folded in so pins written before "specs" became a key of its
+    # own still validate.
+    plan = re.sub(r"#\d+", "#", proj._jdf.queryExecution()
+                  .analyzed().toString())
+    files = sorted(proj.inputFiles())
+    file_sig = f"{len(files)}|{files[:8]}|{files[-8:]}"
+    return hashlib.md5(
+        (plan + "|" + file_sig + "|" + proj.schema.simpleString() + "|"
+         + ",".join(sorted(s.name for s in specs))).encode()
+    ).hexdigest()
+
+
+def _build_tasks(spark: SparkSession, source, specs,
+                 group_col: str | None = None, ckpt_dir: str | None = None,
+                 run_id: str | None = None,
+                 parallelism: int | None = None) -> tuple[DataFrame, int]:
+    """Phase 1 for every build entry point: one ``mapInArrow`` task per
+    input slice builds all ``specs`` in one pass — per group when
+    ``group_col`` is given — and yields its state rows or, with
+    ``ckpt_dir``, commits them atomically.
+
+    ``source`` is a DataFrame (tasks consume its Arrow batches) or a
+    sorted list of parquet files (each task reads its files with
+    pyarrow; see build_partials_files).  Returns (states_df, n_tasks)."""
+    specs = tuple(specs)
+    cols = sorted({s.input for s in specs}
+                  | ({group_col} if group_col else set()))
+    if ckpt_dir is not None and run_id is None:
+        # a shared implicit id would silently resume a DIFFERENT build's
+        # states from the same dir — demand an explicit identity
+        raise ValueError("ckpt_dir requires an explicit run_id")
+    from_files = not isinstance(source, DataFrame)
+    if from_files:
+        # parallelize slices evenly: exactly one file per task by default
+        # (repartition's round-robin can leave tasks empty while others
+        # carry two files).  An explicit ``parallelism`` caps the task
+        # count instead — contiguous file slices per task — which is the
+        # single-box analog of running the same job on fewer executors
+        # (each executor-core simply owns more files), used by the bench's
+        # N-vs-4N scaling evidence.
+        n_tasks = (len(source) if parallelism is None
+                   else min(parallelism, len(source)))
+        inp = spark.sparkContext.parallelize(
+            [(f,) for f in source], n_tasks).toDF(["path"])
+    else:
+        # only needed columns are selected so scan pruning pushes down
+        inp = source.select(*cols)
+        n_tasks = inp.rdd.getNumPartitions()
+    if ckpt_dir is not None:
+        sig = ({"files": source} if from_files
+               else {"plan_fingerprint": _plan_fingerprint(inp, specs)})
+        _pin_ckpt_slicing(ckpt_dir, run_id,
+                          {"n_tasks": n_tasks, **sig,
+                           "specs": sorted(s.name for s in specs)})
+    hash_inputs = {s.input for s in specs if s.kind in _HASH_KINDS}
+
+    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        if ckpt_dir is not None:
-            done = _ckpt_file(ckpt_dir, run_id, pid)
-            if os.path.exists(done):
-                return  # resume: input iterator never consumed
-        pacc = _PartitionAcc(specs)
+        done = None if ckpt_dir is None else _ckpt_file(ckpt_dir, run_id, pid)
+        if done is not None and os.path.exists(done):
+            return  # resume: input iterator never consumed
+        acc = (_PartitionAcc(specs) if group_col is None
+               else _GroupedAcc(specs, group_col))
         for batch in batches:
-            pacc.consume(batch)
-        out = pacc.to_record_batch(pid)
-        if ckpt_dir is not None:
+            if not from_files:
+                acc.consume(batch)
+                continue
+            for f in batch.column("path").to_pylist():
+                pf = pq.ParquetFile(f)
+                acc.bounded = _bounded_cols(pf, hash_inputs)
+                # use_threads=False: each task owns ONE core (cluster
+                # task-slot semantics); Arrow's default pool would
+                # oversubscribe the executor and corrupt N-vs-4N scaling
+                # evidence
+                for fb in pf.iter_batches(batch_size=16384, columns=cols,
+                                          use_threads=False):
+                    acc.consume(fb)
+        out = acc.to_record_batch(pid)
+        if done is not None:
+            # an empty partition commits a zero-row file so a resume
+            # skips it too
             _commit_state(out, done)
-            return
-        yield out
+        elif out.num_rows:
+            yield out
 
-    return fn
+    partials = inp.mapInArrow(
+        task, STATE_SCHEMA if group_col is None else GROUP_STATE_SCHEMA)
+    if ckpt_dir is not None:
+        partials = _materialize_ckpt(partials, spark, ckpt_dir, run_id)
+    return partials, n_tasks
 
 
 def build_partials(df: DataFrame, specs=DEFAULT_SPECS,
@@ -388,44 +475,16 @@ def build_partials(df: DataFrame, specs=DEFAULT_SPECS,
 
     plan keeps the parquet scan's partitioning; only needed columns are
     selected so scan pruning pushes down (ReadSchema shrinks)."""
-    cols = sorted({s.input for s in specs})
-    proj = df.select(*cols)
-    if ckpt_dir is not None and run_id is None:
-        # a shared implicit id would silently resume a DIFFERENT build's
-        # states from the same dir — demand an explicit identity
-        raise ValueError("ckpt_dir requires an explicit run_id")
-    fn = _partial_builder(tuple(specs), ckpt_dir, run_id)
-    if ckpt_dir is not None:
-        # weaker than the file-direct pin (a DataFrame's content is not
-        # enumerable here) but catches the common repartition footgun;
-        # the analyzed-plan fingerprint additionally catches a resume
-        # against a DIFFERENT input (path/schema/plan) that happens to
-        # have the same task count
-        import hashlib
-        import re
+    return _build_tasks(df.sparkSession, df, specs, None, ckpt_dir, run_id)[0]
 
-        # exprIds ("tokens#45") differ per session — strip them or a
-        # legitimate resume in a fresh session would spuriously mismatch.
-        # The analyzed plan alone does NOT name the scanned path
-        # ("Relation [cols] parquet" is path-free), so the fingerprint
-        # also folds in the scan's file listing — bounded to the ends of
-        # the sorted list so a million-file table stays cheap while a
-        # different input directory still changes the pin.
-        plan = re.sub(r"#\d+", "#", proj._jdf.queryExecution()
-                      .analyzed().toString())
-        files = sorted(proj.inputFiles())
-        file_sig = f"{len(files)}|{files[:8]}|{files[-8:]}"
-        fp = hashlib.md5(
-            (plan + "|" + file_sig + "|" + proj.schema.simpleString() + "|"
-             + ",".join(sorted(s.name for s in specs))).encode()
-        ).hexdigest()
-        _pin_ckpt_slicing(ckpt_dir, run_id,
-                          {"n_tasks": proj.rdd.getNumPartitions(),
-                           "plan_fingerprint": fp})
-    partials = proj.mapInArrow(fn, STATE_SCHEMA)
-    if ckpt_dir is not None:
-        return _materialize_ckpt(partials, df.sparkSession, ckpt_dir, run_id)
-    return partials
+
+def _parquet_files(path: str) -> list[str]:
+    import glob as _glob
+
+    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
+    if not files:
+        raise FileNotFoundError(f"no parquet files under {path}")
+    return files
 
 
 def _bounded_cols(pf, cols: set[str]) -> frozenset[str]:
@@ -476,63 +535,8 @@ def build_partials_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
     operator that consumes whole files anyway.  Returns (states_df,
     num_leaves).
     """
-    import glob as _glob
-
-    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
-    specs = tuple(specs)
-    cols = sorted({s.input for s in specs})
-    if ckpt_dir is not None and run_id is None:
-        raise ValueError("ckpt_dir requires an explicit run_id")
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pqr
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        if ckpt_dir is not None:
-            done = _ckpt_file(ckpt_dir, run_id, pid)
-            if os.path.exists(done):
-                return
-        pacc = _PartitionAcc(specs)
-        for pathbatch in batches:
-            for f in pathbatch.column("path").to_pylist():
-                pf = pqr.ParquetFile(f)
-                pacc.bounded = _bounded_cols(pf, pacc.hash_inputs)
-                # use_threads=False: each task owns ONE core (cluster task-slot
-                # semantics); Arrow's default pool would oversubscribe
-                # the executor and corrupt N-vs-4N scaling evidence
-                for batch in pf.iter_batches(batch_size=16384,
-                                             columns=cols,
-                                             use_threads=False):
-                    pacc.consume(batch)
-        out = pacc.to_record_batch(pid)
-        if ckpt_dir is not None:
-            _commit_state(out, done)
-            return
-        yield out
-
-    # parallelize slices evenly: exactly one file per task by default
-    # (repartition's round-robin can leave tasks empty while others
-    # carry two files).  An explicit ``parallelism`` caps the task count
-    # instead — contiguous file slices per task — which is the
-    # single-box analog of running the same job on fewer executors
-    # (each executor-core simply owns more files), used by the bench's
-    # N-vs-4N scaling evidence.
-    n_tasks = len(files) if parallelism is None else min(parallelism,
-                                                         len(files))
-    if ckpt_dir is not None:
-        _pin_ckpt_slicing(ckpt_dir, run_id,
-                          {"n_tasks": n_tasks, "files": files})
-    paths_df = spark.sparkContext.parallelize(
-        [(f,) for f in files], n_tasks).toDF(["path"])
-    partials = paths_df.mapInArrow(fn, STATE_SCHEMA)
-    if ckpt_dir is not None:
-        return (_materialize_ckpt(partials, spark, ckpt_dir, run_id),
-                n_tasks)
-    return partials, n_tasks
+    return _build_tasks(spark, _parquet_files(path), specs, None, ckpt_dir,
+                        run_id, parallelism)
 
 
 def build_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
@@ -540,17 +544,8 @@ def build_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
                 run_id: str | None = None,
                 parallelism: int | None = None) -> BuildResult:
     """End-to-end file-direct build (see build_partials_files)."""
-    partials, leaves = build_partials_files(spark, path, specs, ckpt_dir,
-                                            run_id, parallelism)
-    final = _finalize(partials, leaves, fanin)
-    sketches = {row["kind"]: base.from_bytes(row["state"]) for row in final}
-    return BuildResult(
-        sketches=sketches,
-        n_rows=max((r["n_rows"] for r in final), default=0),
-        n_tokens=max((r["n_tokens"] for r in final), default=0),
-        build_ms_total=max((r["build_ms"] for r in final), default=0.0),
-        num_partitions=leaves,
-    )
+    return _build_result(*build_partials_files(spark, path, specs, ckpt_dir,
+                                               run_id, parallelism), fanin)
 
 
 def tree_merge(states: DataFrame, num_leaves: int, fanin: int = 16,
@@ -635,20 +630,23 @@ def _finalize(partials: DataFrame, num_leaves: int, fanin: int,
     return out
 
 
-def build(df: DataFrame, specs=DEFAULT_SPECS, fanin: int = 16,
-          ckpt_dir: str | None = None, run_id: str | None = None) -> BuildResult:
-    """End-to-end two-phase build -> final sketches on the driver."""
-    num_parts = df.rdd.getNumPartitions()
-    partials = build_partials(df, specs, ckpt_dir, run_id)
-    final = _finalize(partials, num_parts, fanin)
-    sketches = {row["kind"]: base.from_bytes(row["state"]) for row in final}
+def _build_result(partials: DataFrame, num_leaves: int,
+                  fanin: int) -> BuildResult:
+    final = _finalize(partials, num_leaves, fanin)
     return BuildResult(
-        sketches=sketches,
+        sketches={row["kind"]: base.from_bytes(row["state"]) for row in final},
         n_rows=max((r["n_rows"] for r in final), default=0),
         n_tokens=max((r["n_tokens"] for r in final), default=0),
         build_ms_total=max((r["build_ms"] for r in final), default=0.0),
-        num_partitions=num_parts,
+        num_partitions=num_leaves,
     )
+
+
+def build(df: DataFrame, specs=DEFAULT_SPECS, fanin: int = 16,
+          ckpt_dir: str | None = None, run_id: str | None = None) -> BuildResult:
+    """End-to-end two-phase build -> final sketches on the driver."""
+    return _build_result(*_build_tasks(df.sparkSession, df, specs, None,
+                                       ckpt_dir, run_id), fanin)
 
 
 class _GroupedAcc:
@@ -657,39 +655,33 @@ class _GroupedAcc:
     def __init__(self, specs: tuple[SketchSpec, ...], group_col: str):
         self.specs = specs
         self.group_col = group_col
-        self.accs: dict[str, _PartitionAcc] = {}
-        self.ms: dict[str, float] = {}
+        self.inputs = sorted({s.input for s in specs})
+        self.accs: dict[str | None, _PartitionAcc] = {}
+        self.ms: dict[str | None, float] = {}
         self.bounded: frozenset[str] = frozenset()  # see _bounded_cols
 
     def consume(self, batch: pa.RecordBatch) -> None:
         """Regroup ONCE per batch, then feed each group zero-copy value
         slices.
 
-        The previous shape gathered each group's rows with its own
-        Table.take and re-ran the full consume machinery per (group,
-        batch) — measured 4x the ungrouped consume on 5-source token
-        batches (the takes about half of it, the per-group flatten /
-        dedup passes the rest).  Now the group column dictionary-
-        encodes, ONE stable row sort + ONE take makes every group's
-        rows contiguous, each value column flattens once, and
-        per-group value SLICES (zero-copy views into the flat array)
-        go straight into consume_arrays — per-batch passes over
-        token-level data drop from O(groups) to O(1), the single-group
-        batch (input files already laid out by group) skips the sort
-        and take entirely, and the dedup scratch is the same warm
-        buffer the ungrouped build uses.  Nullable group/value columns
-        take the old per-group gather path (nulls need the
-        _flatten_column drop-null semantics)."""
-        gcol = batch.column(self.group_col)
-        inputs = sorted({s.input for s in self.specs})
-        if gcol.null_count or any(
-                batch.column(n).null_count for n in inputs):
-            self._consume_gathered(batch)
-            return
+        The group column dictionary-encodes — a NULL key is a group of
+        its own, as in SQL GROUP BY — then ONE stable row sort + ONE take
+        makes every group's rows contiguous, each value column flattens
+        once, and per-group value SLICES (zero-copy views into the flat
+        array) go straight into consume_arrays.  Per-batch passes over
+        token-level data are O(1) in the group count, the single-group
+        batch (input files already laid out by group) skips the sort and
+        take entirely, and the dedup scratch is the same warm buffer the
+        ungrouped build uses.  Null list rows, null list elements and
+        null scalars are dropped as _flatten_column drops them: row
+        offsets map through the running count of valid values, so such
+        rows still count in n_rows but never reach a sketch."""
         t_start = time.perf_counter()
-        enc = gcol.dictionary_encode()
+        enc = batch.column(self.group_col).dictionary_encode(
+            null_encoding="encode")
         codes = enc.indices.to_numpy(zero_copy_only=False)
-        keys = [str(k) for k in enc.dictionary.to_pylist()]
+        keys = [None if k is None else str(k)
+                for k in enc.dictionary.to_pylist()]
         G = len(keys)
         if G == 0:
             return
@@ -704,31 +696,29 @@ class _GroupedAcc:
             sub = (pa.Table.from_batches([batch]).take(pa.array(order))
                    .combine_chunks().to_batches()[0])
         flats: dict[str, np.ndarray] = {}
-        cum: dict[str, np.ndarray] = {}
-        bad_nulls = False
-        for name in inputs:
+        offs: dict[str, np.ndarray] = {}  # row -> value offsets, if not 1:1
+        for name in self.inputs:
             col = sub.column(name)
             if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
-                vcol = col.flatten()
-                if vcol.null_count:
-                    bad_nulls = True  # null ELEMENTS inside lists
-                    break
-                lens = pc.list_value_length(col).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                cum[name] = np.concatenate(([0], np.cumsum(lens)))
-                flats[name] = vcol.to_numpy(zero_copy_only=False)
-            else:
-                flats[name] = col.to_numpy(zero_copy_only=False)
-        if bad_nulls:
-            self._consume_gathered(batch)
-            return
+                lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy(
+                    zero_copy_only=False)
+                offs[name] = np.concatenate(
+                    ([0], np.cumsum(lens, dtype=np.int64)))
+                col = col.flatten()
+            if col.null_count:
+                kept = np.concatenate(([0], np.cumsum(
+                    col.is_valid().to_numpy(zero_copy_only=False),
+                    dtype=np.int64)))
+                offs[name] = kept[offs[name]] if name in offs else kept
+                col = col.drop_null()
+            flats[name] = col.to_numpy(zero_copy_only=False)
         regroup_ms = (time.perf_counter() - t_start) * 1000.0
         n = batch.num_rows
         for g in range(G):
             s, e = int(bounds[g]), int(bounds[g + 1])
-            vals = {name: (flats[name][cum[name][s]:cum[name][e]]
-                           if name in cum else flats[name][s:e])
-                    for name in inputs}
+            vals = {name: (flats[name][offs[name][s]:offs[name][e]]
+                           if name in offs else flats[name][s:e])
+                    for name in self.inputs}
             key = keys[g]
             if key not in self.accs:
                 self.accs[key] = _PartitionAcc(self.specs)
@@ -742,31 +732,7 @@ class _GroupedAcc:
             self.ms[key] += ((time.perf_counter() - t0) * 1000.0
                              + regroup_ms * ((e - s) / max(n, 1)))
 
-    def _consume_gathered(self, batch: pa.RecordBatch) -> None:
-        """Per-group Arrow row gathers — the null-tolerant fallback
-        (original path): each group's rows are taken out of the batch
-        and run through the full consume() machinery."""
-        groups = batch.column(self.group_col).to_numpy(zero_copy_only=False)
-        order = np.argsort(groups, kind="stable")
-        uniq, starts = np.unique(groups[order], return_index=True)
-        bounds = np.append(starts, len(order))
-        tb = pa.Table.from_batches([batch])
-        for gi, g in enumerate(uniq):
-            rows = order[bounds[gi]:bounds[gi + 1]]
-            sub = tb.take(pa.array(rows)).combine_chunks().to_batches()[0]
-            key = str(g)
-            if key not in self.accs:
-                self.accs[key] = _PartitionAcc(self.specs)
-                self.ms[key] = 0.0
-            acc = self.accs[key]
-            acc.bounded = self.bounded
-            t0 = time.perf_counter()
-            acc.consume(sub)
-            self.ms[key] += (time.perf_counter() - t0) * 1000.0
-
-    def to_record_batch(self, pid: int) -> pa.RecordBatch | None:
-        if not self.accs:
-            return None
+    def to_record_batch(self, pid: int) -> pa.RecordBatch:
         names, pids, kinds, blobs, nr, nt, ms = [], [], [], [], [], [], []
         for g, pacc in self.accs.items():
             build_ms = self.ms[g]  # per-group consume time, non-overlapping
@@ -779,7 +745,8 @@ class _GroupedAcc:
                 nt.append(pacc.n_tokens)
                 ms.append(build_ms)
         return pa.RecordBatch.from_arrays(
-            [pa.array(names), pa.array(pids, type=pa.int32()), pa.array(kinds),
+            [pa.array(names, type=pa.string()), pa.array(pids, type=pa.int32()),
+             pa.array(kinds, type=pa.string()),
              pa.array(blobs, type=pa.binary()), pa.array(nr, type=pa.int64()),
              pa.array(nt, type=pa.int64()), pa.array(ms, type=pa.float64())],
             schema=_GROUP_STATE_PA_SCHEMA,
@@ -792,51 +759,17 @@ def build_grouped(df: DataFrame, specs=DEFAULT_SPECS, group_col: str = "source",
     """Sketch per group with map-side combine: partials per (partition,
 
     group) — NO row-data shuffle, so source skew cannot create a hot
-    task — then a state-only merge keyed by group.
+    task — then a state-only merge keyed by group.  Rows whose group
+    is NULL form one NULL group, as in SQL GROUP BY.
 
     With ``ckpt_dir``/``run_id``, the same resumability contract as the
     ungrouped build: each task atomically commits its per-(partition,
     group) states and a re-run skips completed partitions without
     consuming their input (an empty partition commits a zero-row file
     so the skip applies to it too)."""
-    cols = sorted({s.input for s in specs} | {group_col})
-    proj = df.select(*cols)
-    specs = tuple(specs)
-    if ckpt_dir is not None and run_id is None:
-        raise ValueError("ckpt_dir requires an explicit run_id")
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        if ckpt_dir is not None:
-            done = _ckpt_file(ckpt_dir, run_id, pid)
-            if os.path.exists(done):
-                return  # resume: input iterator never consumed
-        gacc = _GroupedAcc(specs, group_col)
-        for batch in batches:
-            gacc.consume(batch)
-        out = gacc.to_record_batch(pid)
-        if ckpt_dir is not None:
-            if out is None:
-                out = pa.RecordBatch.from_arrays(
-                    [pa.array([], type=f.type)
-                     for f in _GROUP_STATE_PA_SCHEMA],
-                    schema=_GROUP_STATE_PA_SCHEMA)
-            _commit_state(out, done)
-            return
-        if out is not None:
-            yield out
-
-    num_parts = proj.rdd.getNumPartitions()
-    if ckpt_dir is not None:
-        _pin_ckpt_slicing(ckpt_dir, run_id, {"n_tasks": num_parts})
-    partials = proj.mapInArrow(fn, GROUP_STATE_SCHEMA)
-    if ckpt_dir is not None:
-        partials = _materialize_ckpt(partials, df.sparkSession,
+    partials, n_tasks = _build_tasks(df.sparkSession, df, specs, group_col,
                                      ckpt_dir, run_id)
-    return tree_merge(partials, num_parts, fanin,
-                      key_cols=("group", "kind"))
+    return tree_merge(partials, n_tasks, fanin, key_cols=("group", "kind"))
 
 
 def build_grouped_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
@@ -844,42 +777,10 @@ def build_grouped_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
     """File-direct grouped build: same map-side combine, parquet read
 
     inside the workers (no JVM row->Arrow conversion — see
-    build_partials_files)."""
-    import glob as _glob
-
-    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
-    specs = tuple(specs)
-    cols = sorted({s.input for s in specs} | {group_col})
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pqr
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        gacc = _GroupedAcc(specs, group_col)
-        for pathbatch in batches:
-            for f in pathbatch.column("path").to_pylist():
-                pf = pqr.ParquetFile(f)
-                gacc.bounded = _bounded_cols(pf, {s.input for s in specs
-                                                  if s.kind in _HASH_KINDS})
-                # use_threads=False: each task owns ONE core (cluster task-slot
-                # semantics); Arrow's default pool would oversubscribe
-                # the executor and corrupt N-vs-4N scaling evidence
-                for batch in pf.iter_batches(batch_size=16384,
-                                             columns=cols,
-                                             use_threads=False):
-                    gacc.consume(batch)
-        out = gacc.to_record_batch(pid)
-        if out is not None:
-            yield out
-
-    paths_df = spark.sparkContext.parallelize(
-        [(f,) for f in files], len(files)).toDF(["path"])
-    partials = paths_df.mapInArrow(fn, GROUP_STATE_SCHEMA)
-    return tree_merge(partials, len(files), fanin, key_cols=("group", "kind"))
+    build_partials_files).  Not resumable: it takes no checkpoint."""
+    partials, n_tasks = _build_tasks(spark, _parquet_files(path), specs,
+                                     group_col)
+    return tree_merge(partials, n_tasks, fanin, key_cols=("group", "kind"))
 
 
 # ---------------- probe side ----------------------------------------------

@@ -565,27 +565,114 @@ def test_ckpt_pin_corrupt_and_grandfathered(tmp_path):
 
 
 def test_grouped_consume_fast_path_matches_gathered(spark, tiny_df):
-    """The r6 sorted-slice regroup must produce byte-identical states
-    and identical n_rows/n_tokens to the per-group gather fallback."""
+    """The sorted-slice regroup must produce byte-identical states and
+    identical n_rows/n_tokens to one plain consume per group over that
+    group's gathered rows — nullable inputs included: null token rows,
+    null token elements, null n_tok and a NULL group key (kept apart
+    from the string "None")."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    from qsketch.spark.agg import SketchSpec, _GroupedAcc
+    from qsketch.spark.agg import SketchSpec, _GroupedAcc, _PartitionAcc
 
-    pdf = tiny_df.limit(400).toPandas()
-    batch = pa.RecordBatch.from_pandas(pdf)
     specs = (SketchSpec("quotient", "tokens"), SketchSpec("hll", "tokens"),
              SketchSpec("kll", "n_tok"))
+    clean = pa.RecordBatch.from_pandas(tiny_df.limit(400).toPandas())
+    nullable = pa.RecordBatch.from_pydict({
+        "tokens": pa.array([[1, 2, 3], None, [4, None, 5], [], [2, 2],
+                            None, [7]], type=pa.list_(pa.int32())),
+        "n_tok": pa.array([3, 1, None, 0, 2, None, 1], type=pa.int32()),
+        "source": ["web", None, "web", "None", None, "code", "None"],
+    })
+    null_only = nullable.filter(pc.is_null(nullable.column("source")))
 
-    def run(via_gathered):
+    def grouped(batch):
         acc = _GroupedAcc(specs, "source")
-        if via_gathered:
-            acc._consume_gathered(batch)
-        else:
-            acc.consume(batch)
+        acc.consume(batch)
         rb = acc.to_record_batch(0)
         return {(g, k): (st, nr, nt) for g, k, st, nr, nt in zip(
             rb.column(0).to_pylist(), rb.column(2).to_pylist(),
             rb.column(3).to_pylist(), rb.column(4).to_pylist(),
             rb.column(5).to_pylist())}
 
-    assert run(False) == run(True)
+    def gathered(batch):
+        src = batch.column("source")
+        out = {}
+        for key in set(src.to_pylist()):
+            rows = batch.filter(pc.is_null(src) if key is None
+                                else pc.equal(src, key))
+            pacc = _PartitionAcc(specs)
+            pacc.consume(rows)
+            rb = pacc.to_record_batch(0)
+            for k, st, nr, nt in zip(
+                    rb.column(1).to_pylist(), rb.column(2).to_pylist(),
+                    rb.column(3).to_pylist(), rb.column(4).to_pylist()):
+                out[(key, k)] = (st, nr, nt)
+        return out
+
+    for batch in (clean, nullable, null_only):
+        assert grouped(batch) == gathered(batch)
+    # n_rows counts null-token rows; n_tokens counts non-null tokens only
+    counts = {g: v[1:] for (g, k), v in grouped(nullable).items()
+              if k == "hll:tokens"}
+    assert counts == {"web": (2, 5), None: (2, 2), "None": (2, 1),
+                      "code": (1, 0)}
+
+
+def test_grouped_build_null_group_key(spark, tmp_path):
+    """A NULL group key is its own group, as in SQL GROUP BY, and stays
+    apart from the string "None": both grouped builds match exact
+    per-group distinct counts, the NULL group included."""
+    import pyspark.sql.functions as F
+
+    from qsketch.spark.agg import build_grouped_files
+
+    rng = np.random.default_rng(17)
+    sources = ["web", None, "None", "code"]
+    rows = [(f"d{i}", rng.integers(0, 500, rng.integers(1, 20)).tolist(),
+             sources[i % 4]) for i in range(600)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, source string").repartition(3)
+    p = str(tmp_path / "nullgroups")
+    df.write.parquet(p)
+    df = spark.read.parquet(p)
+    specs = (SketchSpec("quotient", "tokens"),)
+    exact = {r["source"]: r["d"] for r in
+             df.select("source", F.explode("tokens").alias("t"))
+               .groupBy("source").agg(F.countDistinct("t").alias("d"))
+               .collect()}
+    assert set(exact) == set(sources)
+    for merged in (build_grouped(df, specs, "source"),
+                   build_grouped_files(spark, p, specs, "source")):
+        got = {r["group"]: base.from_bytes(r["state"]).cardinality()
+               for r in merged.collect()}
+        assert got == exact
+
+
+def test_ckpt_resume_rejects_changed_specs_files(spark, tiny_df, tmp_path):
+    """Resuming a file-direct checkpoint with a different spec set must
+    fail: every partition would be marked done and the new kind would be
+    missing from the result."""
+    from qsketch.spark.agg import build_files
+
+    p = str(tmp_path / "cks")
+    tiny_df.repartition(4).write.parquet(p)
+    ck = str(tmp_path / "ck")
+    build_files(spark, p, (SketchSpec("quotient", "tokens"),),
+                ckpt_dir=ck, run_id="r")
+    with pytest.raises(ValueError, match="mis-map"):
+        build_files(spark, p, (SketchSpec("quotient", "tokens"),
+                               SketchSpec("hll", "tokens")),
+                    ckpt_dir=ck, run_id="r")
+
+
+def test_ckpt_resume_rejects_changed_specs_grouped(spark, tmp_path):
+    """The grouped build pins its spec set the same way."""
+    df = generate_tokenized(spark, 200, seed=3, num_partitions=2)
+    ck = str(tmp_path / "gck")
+    build_grouped(df, (SketchSpec("quotient", "tokens"),), "source",
+                  ckpt_dir=ck, run_id="g").collect()
+    with pytest.raises(ValueError, match="mis-map"):
+        build_grouped(df, (SketchSpec("quotient", "tokens"),
+                           SketchSpec("hll", "tokens")), "source",
+                      ckpt_dir=ck, run_id="g").collect()
